@@ -49,9 +49,11 @@ def test_backward(spark, feats, oracle_feats, queries_pdf):
 
 
 def test_backward_salted_equals_plain(spark, feats, oracle_feats, queries_pdf):
+    # hot_threshold=0: every conversation with a build row takes the
+    # salted (time-sliced) route
     q = queries_df(spark, queries_pdf)
     _check(
-        backfill_features(feats, q, salted=True, slice_width_s=600).toPandas(),
+        backfill_features(feats, q, hot_threshold=0, slice_width_s=600).toPandas(),
         oracle_backfill(oracle_feats, queries_pdf),
     )
 
@@ -391,3 +393,15 @@ def test_salted_nearest_matches_plain_with_ties_and_slices(spark):
         # tie at +-50s resolves BACKWARD (pandas nearest semantics)
         tie = plain[plain["query_id"] == 0]["turn_idx"].iloc[0]
         assert tie == 0
+
+
+def test_coerce_refuses_lossy_cast():
+    """A merge-scan output column that cannot take its Spark type fails
+    loudly, naming the column and both dtypes — never a mis-typed column."""
+    from pyspark.sql import types as T
+
+    from tgist_features_spark.operators.asof import _coerce
+
+    pdf = pd.DataFrame({"n": [1.0, 1.5]})
+    with pytest.raises(ValueError, match=r"'n'.*float64.*Int64"):
+        _coerce(pdf, [T.StructField("n", T.LongType())])

@@ -4,6 +4,7 @@ the fused plan in plans/backfill.py must stay equivalent to these."""
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import functions as F
 
 from tgist_features_spark.operators.ordering import canonical_order
@@ -17,6 +18,7 @@ from tgist_features_spark.operators.windows import (
     with_rolling_counts,
     with_rolling_time,
 )
+from tgist_features_spark.oracle.pandas_oracle import oracle_turn_features
 from tgist_features_spark.plans.backfill import turn_features
 from tgist_features_spark.sources.corpus import transcripts_df
 
@@ -63,6 +65,25 @@ def test_modular_ops_equal_fused_plan(spark, tiny_pdf):
     for col in ["prev_role", "next_role", "last_tool"]:
         a, b = modular[col], fused[col]
         assert ((a.isna() & b.isna()) | (a == b)).all(), col
+
+
+def test_session_threshold_agrees_at_fractional_gap(spark):
+    """A gap of exactly the threshold is not a boundary: sessionize, the
+    fused plan and the oracle all compare double seconds. At 1.001 s a
+    microsecond cut-off would truncate to 1,000,999 us and split."""
+    pdf = pd.DataFrame({
+        "conv_id": ["c", "c"],
+        "turn_idx": [0, 1],
+        "role": ["user", "assistant"],
+        "text": ["a b", "c d"],
+        "tool": [None, None],
+        "ts": pd.to_datetime([0, 1_001_000], unit="us"),
+    })
+    df = transcripts_df(spark, pdf)
+    want = oracle_turn_features(pdf, gap_s=1.001)["session_id"].tolist()
+    assert _sorted(sessionize(df, gap_s=1.001))["session_id"].tolist() == want
+    assert _sorted(turn_features(df, gap_s=1.001))["session_id"].tolist() == want
+    assert want == [0, 0]
 
 
 def test_rolling_time_frame(spark, tiny_pdf):

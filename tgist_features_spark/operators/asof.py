@@ -1,10 +1,12 @@
 """As-of join (J1/J2/J3, SURVEY.md §2.3) — the engine's flagship operator.
 
-Spark 4.1 has no ASOF JOIN in Catalyst, so this is a custom merge-scan:
-both sides are co-partitioned by the entity key via ``cogroup`` (one shuffle
-each), sorted inside the Python worker, and merged with ``pandas.merge_asof``
-per Arrow batch group. Semantics (pinned by property tests against the pure
-pandas oracle and DuckDB's ASOF JOIN):
+Spark 4.1 has no ASOF JOIN in Catalyst, so this is a custom range-
+partitioned merge-scan: probe and build rows are tagged and unioned, ONE
+``repartitionByRange`` on the entity key co-locates every entity in a
+single partition, ``sortWithinPartitions`` orders each partition by event
+time, and one vectorized ``pandas.merge_asof(by=entity)`` per partition
+(``mapInPandas``) merges thousands of entities per call. Semantics (pinned
+by property tests against the pure pandas oracle and DuckDB's ASOF JOIN):
 
 * backward: match the build row with the greatest ts <= query_ts
   (``allow_exact_matches=False`` makes it strictly <) — the point-in-time /
@@ -17,7 +19,7 @@ pandas oracle and DuckDB's ASOF JOIN):
 * null query_ts or unseen entity -> null match.
 
 Skew: a hot conversation funnels its entire probe+build volume through one
-cogroup task. ``asof_join_salted`` time-slices both sides into
+merge-scan task. ``asof_join_salted`` time-slices both sides into
 ``(entity, floor(ts / slice_width))`` sub-keys and replicates, per slice,
 exactly one *carry-in* row (the latest build row from any earlier slice —
 computed with a hash aggregation + one tiny window over slice summaries, all
@@ -95,8 +97,11 @@ def _coerce(pdf: pd.DataFrame, fields: list[T.StructField]) -> pd.DataFrame:
             elif str(pdf[f.name].dtype) != str(dt):
                 try:
                     pdf[f.name] = pdf[f.name].astype(dt)
-                except (TypeError, ValueError):
-                    pass
+                except (TypeError, ValueError) as e:
+                    raise ValueError(
+                        f"as-of output column {f.name!r}: cannot coerce "
+                        f"{pdf[f.name].dtype} to {dt} ({f.dataType.simpleString()})"
+                    ) from e
         else:
             pdf[f.name] = pd.Series([None] * len(pdf), dtype=dt)
     return pdf[[f.name for f in fields]]
@@ -116,80 +121,6 @@ def _plan(probe: DataFrame, build: DataFrame, by, left_on, right_on, value_cols)
     ]
     out_schema = T.StructType(list(probe.schema.fields) + carried)
     return by, value_cols, rename, carried, out_schema
-
-
-def _make_merge_fn(left_on, right_on, value_cols, rename, carried, out_schema,
-                   probe_cols, direction, tolerance, allow_exact_matches,
-                   tiebreak, drop_cols):
-    tol = pd.Timedelta(seconds=tolerance) if tolerance is not None else None
-
-    def merge(l: pd.DataFrame, r: pd.DataFrame) -> pd.DataFrame:
-        if len(l) == 0:
-            return _coerce(pd.DataFrame(), out_schema.fields)
-        keep = [c for c in l.columns if c not in drop_cols]
-        l = l[keep]
-        ok = l[left_on].notna()
-        l_null = l[~ok]
-        l = l[ok].sort_values(left_on, kind="mergesort")
-        if len(r):
-            r = r[r[right_on].notna()]
-        if len(r) == 0 or len(l) == 0:
-            merged = l.copy()
-            for f in carried:
-                merged[f.name] = None
-        else:
-            sort_keys = [right_on] + [t for t in tiebreak if t in r.columns]
-            r = r.sort_values(sort_keys, kind="mergesort")
-            r = r.assign(__rkey=r[right_on]).rename(columns=rename)
-            r = r[[rename[c] for c in value_cols] + ["__rkey"]]
-            merged = pd.merge_asof(
-                l,
-                r,
-                left_on=left_on,
-                right_on="__rkey",
-                direction=direction,
-                tolerance=tol,
-                allow_exact_matches=allow_exact_matches,
-            ).drop(columns="__rkey")
-        if len(l_null):
-            merged = pd.concat([merged, l_null], ignore_index=True)
-        return _coerce(merged, out_schema.fields)
-
-    return merge
-
-
-def asof_join_cogrouped(
-    probe: DataFrame,
-    build: DataFrame,
-    by: str | list[str] = "conv_id",
-    left_on: str = "query_ts",
-    right_on: str = "ts",
-    direction: str = "backward",
-    tolerance: float | None = None,
-    allow_exact_matches: bool = True,
-    value_cols: list[str] | None = None,
-    tiebreak: tuple[str, ...] = ("turn_idx",),
-) -> DataFrame:
-    """Cogrouped as-of: one pandas merge per entity group.
-
-    Simple and fully general (multi-column ``by``), but pays one Python
-    call per group — use ``asof_join`` (merge-scan) unless the key is
-    composite. The salted path reuses this on (entity, slice) sub-keys.
-    """
-    assert direction in ("backward", "forward", "nearest")
-    by, value_cols, rename, carried, out_schema = _plan(
-        probe, build, by, left_on, right_on, value_cols
-    )
-    merge = _make_merge_fn(
-        left_on, right_on, value_cols, rename, carried, out_schema,
-        probe.columns, direction, tolerance, allow_exact_matches, tiebreak,
-        drop_cols=set(),
-    )
-    return (
-        probe.groupBy(*by)
-        .cogroup(build.groupBy(*by))
-        .applyInPandas(merge, schema=out_schema)
-    )
 
 
 def asof_join(
@@ -326,7 +257,7 @@ def asof_join_auto(
 ) -> DataFrame:
     """Skew-adaptive as-of join: entities whose build side exceeds
     ``hot_threshold`` rows take the salted (time-sliced) path, everything
-    else the plain cogroup path; results are unioned.
+    else the plain merge-scan (``asof_join``); results are unioned.
 
     This is the production entry point at the 10^12-turn design scale: the
     per-entity count is one cheap hash aggregation, the hot set is tiny by
@@ -378,8 +309,10 @@ def asof_join_salted(
 ) -> DataFrame:
     """Skew-safe as-of join: time-sliced sub-keys + carry-in replication.
 
-    Identical results to ``asof_join`` (tested); group size per cogroup task
-    is bounded by rows-per-(entity, slice) instead of rows-per-entity.
+    Identical results to ``asof_join`` (tested). The final merge-scan range-
+    partitions on the composite ``(entity, slice)`` key, so the rows one
+    task holds for an entity are bounded by rows-per-(entity, slice)
+    instead of rows-per-entity.
 
     ``direction='nearest'`` (round 5 — closes the last asof gap): carries
     from BOTH sides of every slice would double the carry bookkeeping

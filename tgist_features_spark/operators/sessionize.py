@@ -10,10 +10,19 @@ construction).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
-from tgist_features_spark.functions.timeu import us
+from tgist_features_spark.operators.windows import gap_seconds
+
+
+def session_number(gap: Column, w: WindowSpec, gap_s: float) -> Column:
+    """Running count of gaps > ``gap_s`` seconds over the ordered window
+    ``w``: the first row of an entity is in session 0. ``gap`` is the
+    double-seconds gap to the previous row (``windows.gap_seconds``)."""
+    boundary = F.when(gap > F.lit(gap_s), 1).otherwise(0)
+    cum = w.rowsBetween(Window.unboundedPreceding, 0)
+    return F.sum(boundary).over(cum).cast("long")
 
 
 def sessionize(
@@ -30,13 +39,7 @@ def sessionize(
     boundary flags. The first turn of a conversation starts session 0.
     """
     w = Window.partitionBy(entity).orderBy(*order)
-    prev_ts = F.lag(F.col(ts)).over(w)
-    gap_us = us(F.col(ts)) - us(prev_ts)
-    boundary = F.when(gap_us > int(gap_s * 1_000_000), 1).otherwise(0)
-    cum = Window.partitionBy(entity).orderBy(*order).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    return df.withColumn(out_col, F.sum(boundary).over(cum).cast("long"))
+    return df.withColumn(out_col, session_number(gap_seconds(w, ts), w, gap_s))
 
 
 def session_bounds(

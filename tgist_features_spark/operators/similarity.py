@@ -144,32 +144,6 @@ def queries_from_ids(
     )
 
 
-def lsh_signatures(
-    df: DataFrame,
-    dim: int,
-    n_planes: int = 16,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Random-hyperplane (SimHash-for-vectors) bucket id per vector."""
-    rng = np.random.default_rng(seed)
-    planes = rng.normal(size=(n_planes, dim)).astype(np.float64)
-
-    @pandas_udf(T.LongType())
-    def bucket(vecs: pd.Series) -> pd.Series:
-        m = np.stack(vecs.to_numpy())  # (batch, dim)
-        bits = (m @ planes.T) > 0  # (batch, n_planes)
-        weights = (1 << np.arange(n_planes)).astype(np.int64)
-        return pd.Series((bits @ weights).astype(np.int64))
-
-    return df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        bucket(F.col(vec_col).cast("array<double>")).alias("bucket"),
-    )
-
-
 def _lsh_multi_buckets(
     df: DataFrame,
     dim: int,

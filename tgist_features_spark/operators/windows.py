@@ -44,6 +44,27 @@ def with_lag_lead(
     return out
 
 
+def gap_seconds(w: WindowSpec, ts: str = "ts") -> Column:
+    """Seconds since the previous row of ``w`` (null on the first row)."""
+    return (us(F.col(ts)) - us(F.lag(F.col(ts)).over(w))) / F.lit(1_000_000.0)
+
+
+def turn_number(w: WindowSpec) -> Column:
+    """1-based position of the row in its ordered window."""
+    return F.row_number().over(w)
+
+
+def turn_count(entity: str) -> Column:
+    """Rows in the row's entity partition."""
+    return F.count(F.lit(1)).over(Window.partitionBy(entity))
+
+
+def turns_remaining() -> Column:
+    """Rows after this one in the entity partition, from the ``turn_no``
+    and ``turns_total`` columns."""
+    return F.col("turns_total") - F.col("turn_no")
+
+
 def with_delta_ts(
     df: DataFrame,
     ts: str = "ts",
@@ -52,12 +73,7 @@ def with_delta_ts(
     out_col: str = "gap_s",
 ) -> DataFrame:
     """Seconds since the previous turn (null on the first turn of a conv)."""
-    w = _w(entity, order)
-    prev = F.lag(F.col(ts)).over(w)
-    return df.withColumn(
-        out_col,
-        (us(F.col(ts)) - us(prev)) / F.lit(1_000_000.0),
-    )
+    return df.withColumn(out_col, gap_seconds(_w(entity, order), ts))
 
 
 def with_position(
@@ -66,13 +82,10 @@ def with_position(
     order: tuple[str, ...] = ("ts", "turn_idx"),
 ) -> DataFrame:
     """W2: 1-based turn number and reverse index within the conversation."""
-    w = _w(entity, order)
-    n = F.count(F.lit(1)).over(Window.partitionBy(entity))
-    rn = F.row_number().over(w)
     return (
-        df.withColumn("turn_no", rn)
-        .withColumn("turns_total", n)
-        .withColumn("turns_remaining", n - rn)
+        df.withColumn("turn_no", turn_number(_w(entity, order)))
+        .withColumn("turns_total", turn_count(entity))
+        .withColumn("turns_remaining", turns_remaining())
     )
 
 

@@ -15,16 +15,19 @@ an explicitly label-side column and excluded from the feature vector.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from tgist_features_spark.functions.text import with_ngram_features
-from tgist_features_spark.operators.asof import (
-    asof_join,
-    asof_join_auto,
-    asof_join_salted,
-)
+from tgist_features_spark.operators.asof import asof_join, asof_join_auto
 from tgist_features_spark.operators.ordering import canonical_order
+from tgist_features_spark.operators.sessionize import session_number
+from tgist_features_spark.operators.windows import (
+    gap_seconds,
+    turn_count,
+    turn_number,
+    turns_remaining,
+)
 
 # ordered numeric feature vector layout (allclose contract is per-position)
 FEATURE_COLS = [
@@ -45,40 +48,33 @@ FEATURE_COLS = [
 def turn_features(df: DataFrame, gap_s: float = 1800.0) -> DataFrame:
     """transcripts -> one feature row per turn (entity x timestamp).
 
-    Fused form of the modular operators (windows.py / sessionize.py —
-    semantics identical, oracle-gated): expressions sharing a frame share
-    one Window node, so the whole feature pass is 4 window passes over the
-    single canonical-order sort instead of 8.
+    Fused form of the modular operators: the same Column functions
+    (windows.py / sessionize.py) selected so that expressions sharing a
+    frame share one Window node — 4 window passes over the single
+    canonical-order sort instead of 8.
     """
-    from pyspark.sql import Window
-
-    from tgist_features_spark.functions.timeu import us
-
     out = canonical_order(df)
     w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
-    w_all = Window.partitionBy("conv_id")
     w_cum = w.rowsBetween(Window.unboundedPreceding, 0)
     w_roll = w.rowsBetween(-5, -1)
 
     # pass 1 — plain offset/frame-free expressions (lag/lead family)
-    prev_ts = F.lag("ts").over(w)
     out = out.select(
         "*",
-        ((us(F.col("ts")) - us(prev_ts)) / F.lit(1_000_000.0)).alias("gap_s"),
+        gap_seconds(w).alias("gap_s"),
         F.lag("role").over(w).alias("prev_role"),
         F.lead("role").over(w).alias("next_role"),
-        F.count(F.lit(1)).over(w_all).alias("turns_total"),
+        turn_count("conv_id").alias("turns_total"),
     )
     # pass 2 — cumulative frame (row_number shares the running frame)
-    boundary = F.when(F.col("gap_s") > F.lit(gap_s), 1).otherwise(0)
     out = out.select(
         "*",
-        F.row_number().over(w).alias("turn_no"),
-        F.sum(boundary).over(w_cum).cast("long").alias("session_id"),
+        turn_number(w).alias("turn_no"),
+        session_number(F.col("gap_s"), w, gap_s).alias("session_id"),
         F.last("tool", ignorenulls=True).over(w_cum).alias("last_tool"),
         F.sum(F.length("text")).over(w_cum).cast("long").alias("cum_chars"),
     )
-    out = out.withColumn("turns_remaining", F.col("turns_total") - F.col("turn_no"))
+    out = out.withColumn("turns_remaining", turns_remaining())
     # pass 3 — trailing row frame (-5..-1): leakage-safe rolling features
     out = out.select(
         "*",
@@ -97,7 +93,6 @@ def turn_features(df: DataFrame, gap_s: float = 1800.0) -> DataFrame:
 def backfill_features(
     features: DataFrame,
     queries: DataFrame,
-    salted: bool = False,
     slice_width_s: int = 3600,
     hot_threshold: int | None = None,
 ) -> DataFrame:
@@ -106,8 +101,10 @@ def backfill_features(
     backward direction, exact matches allowed — a feature stamped at ts is
     valid AT ts).
 
-    ``hot_threshold`` switches to the skew-adaptive path (salt only hot
-    conversations); ``salted`` forces time-slicing for every entity.
+    ``hot_threshold`` switches to the skew-adaptive path: conversations
+    with more than ``hot_threshold`` feature rows take the salted as-of,
+    time-sliced into ``slice_width_s`` slices (``hot_threshold=0`` salts
+    every conversation).
     """
     value_cols = ["ts", "turn_idx", "feature_vec"]
     kw = dict(
@@ -120,6 +117,4 @@ def backfill_features(
             queries, build, slice_width_s=slice_width_s,
             hot_threshold=hot_threshold, **kw,
         )
-    if salted:
-        return asof_join_salted(queries, build, slice_width_s=slice_width_s, **kw)
     return asof_join(queries, build, **kw)

@@ -1,10 +1,9 @@
 """Driver-contract query registry (SURVEY.md §3.3).
 
 One entry per implemented operator from SURVEY.md §2 plus the training-data
-ops (dedup / similarity / text analysis / multimodal). Each Spark query has
-a DuckDB oracle that computes the same result over the same parquet —
-except the genuinely non-SQL-expressible ones (MinHash/SimHash/LSH,
-approx_count_distinct), which ship without an oracle (rows-only check).
+ops (dedup / similarity / text analysis / media byte counts). Every Spark
+query in ``QUERIES`` has a DuckDB oracle in ``ORACLES`` that computes the
+same result over the same parquet; the sweep compares them bitwise.
 
 Parity conventions (hash-compare discipline):
 * every computed column aliased identically on both sides;
@@ -35,6 +34,7 @@ from tgist_features_spark.operators.dedup import (
     simhash_near_pairs,
 )
 from tgist_features_spark.operators.sessionize import sessionize
+from tgist_features_spark.operators.windows import gap_seconds, turn_number
 from tgist_features_spark.operators.similarity import (
     cosine_topk,
     lsh_ann_topk,
@@ -113,7 +113,7 @@ def q_lag_lead(spark, sf):
         "event_id",
         F.lag("value").over(w).alias("prev_value"),
         F.lead("value").over(w).alias("next_value"),
-        ((_US("ts") - _US(F.lag("ts").over(w))) / F.lit(1000000.0)).alias("gap_s"),
+        gap_seconds(w).alias("gap_s"),
     )
 
 
@@ -1834,9 +1834,9 @@ def q_feature_vector(spark, sf):
         "user_id",
         "event_id",
         _US("ts").alias("ts_us"),
-        ((_US("ts") - _US(F.lag("ts").over(w))) / F.lit(1000000.0)).alias("gap_s"),
+        gap_seconds(w).alias("gap_s"),
         "session_id",
-        F.row_number().over(w).alias("turn_no"),
+        turn_number(w).alias("turn_no"),
         F.count(F.lit(1)).over(wp).alias("n_prev3"),
         F.round(F.sum("value").over(wp), 2).alias("sum_prev3"),
         F.round(F.sum("value").over(wc), 2).alias("cum_value"),
