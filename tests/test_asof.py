@@ -8,7 +8,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from tgist_features_spark.operators.asof import asof_join, asof_join_salted
+from tgist_features_spark.operators.asof import asof_join, asof_join_auto
 from tgist_features_spark.oracle.pandas_oracle import oracle_backfill
 from tgist_features_spark.plans.backfill import backfill_features, turn_features
 from tgist_features_spark.sources.corpus import queries_df, transcripts_df
@@ -74,7 +74,7 @@ def test_forward(spark, feats, oracle_feats, queries_pdf, direction):
 
 
 def test_forward_salted(spark, feats, oracle_feats, queries_pdf):
-    got = asof_join_salted(
+    got = asof_join_auto(
         queries_df(spark, queries_pdf),
         feats.select("conv_id", "ts", "turn_idx", "feature_vec"),
         by="conv_id",
@@ -82,6 +82,7 @@ def test_forward_salted(spark, feats, oracle_feats, queries_pdf):
         right_on="ts",
         direction="forward",
         value_cols=["ts", "turn_idx", "feature_vec"],
+        hot_threshold=0,
         slice_width_s=600,
     ).toPandas()
     _check(got, oracle_backfill(oracle_feats, queries_pdf, direction="forward"))
@@ -187,21 +188,23 @@ def test_duplicate_ts_tiebreak(spark):
     assert set(fwd["v"]) == {12.0}
 
 
-def test_auto_skew_split_equals_plain(spark, feats, oracle_feats, queries_pdf):
-    """asof_join_auto: hot entities salted, cold plain — same results."""
-    from tgist_features_spark.operators.asof import asof_join_auto
-
+@pytest.mark.parametrize("direction", ["backward", "forward", "nearest"])
+def test_auto_skew_split_equals_plain(
+    spark, feats, oracle_feats, queries_pdf, direction
+):
+    """asof_join_auto: hot entities sliced, cold unsliced — same results."""
     got = asof_join_auto(
         queries_df(spark, queries_pdf),
         feats.select("conv_id", "ts", "turn_idx", "feature_vec"),
         by="conv_id",
         left_on="query_ts",
         right_on="ts",
+        direction=direction,
         value_cols=["ts", "turn_idx", "feature_vec"],
         hot_threshold=20,   # low threshold so both paths are exercised
         slice_width_s=600,
     ).toPandas()
-    _check(got, oracle_backfill(oracle_feats, queries_pdf))
+    _check(got, oracle_backfill(oracle_feats, queries_pdf, direction=direction))
 
 
 def test_asof_auto_partitions_equals_plain(spark, tiny_pdf):
@@ -277,11 +280,9 @@ def test_nearest(spark, feats, oracle_feats, queries_pdf, direction):
 
 
 def test_nearest_supported_by_salted(spark, feats, queries_pdf):
-    """Round 5: 'nearest' is no longer rejected by the salted path — it
-    composes the two directional passes; on the golden corpus it must
-    equal the plain merge-scan (the dedicated tie/slice test exercises
-    the hard cases)."""
-    from tgist_features_spark.operators.asof import asof_join, asof_join_salted
+    """'nearest' through the sliced route (every conversation sliced) must
+    equal the plain merge-scan on the golden corpus (the dedicated
+    tie/slice test exercises the hard cases)."""
 
     q = queries_df(spark, queries_pdf)
     kw = dict(by="conv_id", left_on="query_ts", right_on="ts",
@@ -291,7 +292,8 @@ def test_nearest_supported_by_salted(spark, feats, queries_pdf):
         .toPandas().sort_values("query_id").reset_index(drop=True)
     )
     salted = (
-        asof_join_salted(q, feats.select("conv_id", "ts", "turn_idx"), **kw)
+        asof_join_auto(q, feats.select("conv_id", "ts", "turn_idx"),
+                       hot_threshold=0, **kw)
         .toPandas().sort_values("query_id").reset_index(drop=True)
     )
     import pandas as pd
@@ -309,8 +311,6 @@ def test_salted_probe_only_slice_gets_carry(spark):
     would exist and the probe would wrongly return null (the faster
     tag-free variant measured in round 4 fails this case)."""
     import pandas as pd
-
-    from tgist_features_spark.operators.asof import asof_join, asof_join_salted
 
     build = spark.createDataFrame(
         pd.DataFrame(
@@ -336,20 +336,20 @@ def test_salted_probe_only_slice_gets_carry(spark):
         direction="backward", value_cols=["ts", "turn_idx"],
     )
     plain = asof_join(probe, build, **kw).toPandas()
-    salted = asof_join_salted(probe, build, slice_width_s=3600, **kw).toPandas()
+    salted = asof_join_auto(
+        probe, build, hot_threshold=0, slice_width_s=3600, **kw
+    ).toPandas()
     assert salted["turn_idx"].tolist() == plain["turn_idx"].tolist() == [2]
 
 
 def test_salted_nearest_matches_plain_with_ties_and_slices(spark):
-    """Salted 'nearest' (round 5 — the last asof direction gap) must equal
-    the plain merge-scan on a frame engineered to exercise everything the
-    composition can get wrong: exact-distance ties (backward must win),
+    """Sliced 'nearest' must equal the plain merge-scan on a frame
+    engineered to exercise everything the carries can get wrong:
+    exact-distance ties (backward must win),
     matches that live in NEIGHBORING slices on either side, probe-only
     slices, tolerance rejection, and null probe timestamps."""
     import numpy as np
     import pandas as pd
-
-    from tgist_features_spark.operators.asof import asof_join, asof_join_salted
 
     base = pd.Timestamp("2024-01-01")
     rows = []
@@ -384,7 +384,7 @@ def test_salted_nearest_matches_plain_with_ties_and_slices(spark):
         # slice width 100s: every inter-event probe needs a neighbor-slice
         # candidate on at least one side
         salted = (
-            asof_join_salted(p, b, slice_width_s=100, **kw)
+            asof_join_auto(p, b, hot_threshold=0, slice_width_s=100, **kw)
             .toPandas().sort_values("query_id").reset_index(drop=True)
         )
         for c in ["ts", "turn_idx"]:

@@ -10,7 +10,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from tgist_features_spark.operators.asof import asof_join
+from tgist_features_spark.operators.asof import asof_join, asof_join_auto
 from tgist_features_spark.plans.backfill import turn_features
 from tgist_features_spark.sources.corpus import (
     generate_queries_pdf,
@@ -33,11 +33,24 @@ def frames(spark, tiny_pdf):
     return t, q
 
 
-def test_asof_is_single_range_exchange_mergescan(spark, frames):
+@pytest.mark.parametrize("route", ["plain", "auto"])
+def test_asof_is_single_range_exchange_mergescan(spark, frames, route):
     t, q = frames
-    p = _plan(asof_join(q, t, value_cols=["ts", "turn_idx", "role"]))
+    if route == "plain":
+        df = asof_join(q, t, value_cols=["ts", "turn_idx", "role"])
+    else:
+        # 6 of the 20 tiny conversations have more than 5 turns: the skew
+        # route sees hot and cold conversations in one call
+        df = asof_join_auto(
+            q, t, value_cols=["ts", "turn_idx", "role"], hot_threshold=5,
+            slice_width_s=86400,
+        )
+    p = _plan(df)
     assert "MapInPandas" in p, "as-of must be the bulk merge-scan"
     assert "FlatMapCoGroupsInPandas" not in p, "no per-group Python calls"
+    assert len(re.findall(r"^\(\d+\) MapInPandas", p, re.M)) == 1, (
+        "exactly one merge-scan"
+    )
     assert len(re.findall(r"rangepartitioning", p)) == 1, (
         "exactly one range exchange feeds the merge"
     )

@@ -8,7 +8,7 @@ import pandas as pd
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from tgist_features_spark.operators.asof import asof_join, asof_join_salted
+from tgist_features_spark.operators.asof import asof_join, asof_join_auto
 from tgist_features_spark.operators.sessionize import sessionize
 
 SPARK = None  # filled by fixture-wrapped tests below
@@ -70,8 +70,8 @@ def test_asof_matches_merge_asof(spark, seed, direction, salted):
     build, probe = _rand_frames(seed, n_entities=5, n_build=60, n_probe=40)
     b = spark.createDataFrame(build, schema="conv_id string, ts timestamp, turn_idx int, v double")
     p = spark.createDataFrame(probe, schema="conv_id string, query_ts timestamp, query_id long")
-    fn = asof_join_salted if salted else asof_join
-    kw = {"slice_width_s": 3600 * 24} if salted else {}
+    fn = asof_join_auto if salted else asof_join
+    kw = {"hot_threshold": 0, "slice_width_s": 3600 * 24} if salted else {}
     got = (
         fn(p, b, by="conv_id", left_on="query_ts", right_on="ts",
            direction=direction, value_cols=["ts", "turn_idx", "v"], **kw)

@@ -1,10 +1,14 @@
-"""Every engine module is reached from an entry point.
+"""Every engine module is reached from an entry point, and every engine
+name an entry point imports exists.
 
 Pure AST walk, no Spark: starting from the jobs, the bench harnesses, the
 driver entry and the repo benchmark, follow ``import`` statements
 transitively and require that every ``tgist_features_spark`` module is
 imported by something a query, job or benchmark runs. Code that nothing
-reaches is deleted, not kept alive by its own tests.
+reaches is deleted, not kept alive by its own tests. The second test
+guards the other direction: a deletion must not strand an import in one
+of those entry points (the bench harnesses import lazily, inside
+functions, so a stale name would only fail mid-run).
 """
 
 from __future__ import annotations
@@ -74,3 +78,49 @@ def test_every_engine_module_is_reached():
             seen.add(m)
             todo.append((mods[m], m))
     assert sorted(set(mods) - seen) == []
+
+
+def _bound_names(body: list[ast.stmt]) -> set[str]:
+    """Names a module body binds at import time: defs, classes,
+    assignments and imports, including those under top-level if/try."""
+    out: set[str] = set()
+    for node in body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            out.add(node.name)
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            out.update((a.asname or a.name).split(".")[0] for a in node.names)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign, ast.AugAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for t in targets:
+                out.update(n.id for n in ast.walk(t) if isinstance(n, ast.Name))
+        else:
+            for field in ("body", "orelse", "finalbody", "handlers"):
+                out |= _bound_names(getattr(node, field, []))
+    return out
+
+
+def test_entry_point_imports_resolve():
+    mods = _engine_modules()
+    bound: dict[str, set[str]] = {}
+    missing = []
+    for root in _roots():
+        for node in ast.walk(ast.parse(root.read_text())):
+            if isinstance(node, ast.Import):
+                missing += [
+                    f"{root.name}: import {a.name}" for a in node.names
+                    if a.name.split(".")[0] == PKG and a.name not in mods
+                ]
+            elif isinstance(node, ast.ImportFrom) and not node.level:
+                mod = node.module or ""
+                if mod.split(".")[0] != PKG:
+                    continue
+                if mod not in mods:
+                    missing.append(f"{root.name}: from {mod}")
+                    continue
+                if mod not in bound:
+                    bound[mod] = _bound_names(ast.parse(mods[mod].read_text()).body)
+                missing += [
+                    f"{root.name}: from {mod} import {a.name}" for a in node.names
+                    if a.name not in bound[mod] and f"{mod}.{a.name}" not in mods
+                ]
+    assert missing == []

@@ -19,14 +19,15 @@ by property tests against the pure pandas oracle and DuckDB's ASOF JOIN):
 * null query_ts or unseen entity -> null match.
 
 Skew: a hot conversation funnels its entire probe+build volume through one
-merge-scan task. ``asof_join_salted`` time-slices both sides into
-``(entity, floor(ts / slice_width))`` sub-keys and replicates, per slice,
-exactly one *carry-in* row (the latest build row from any earlier slice —
-computed with a hash aggregation + one tiny window over slice summaries, all
-JVM-side) so every slice's lookback is self-contained. Result is provably
-identical to the unsalted join (tests/test_asof.py) while bounding the
-per-task group size — the 10^12-turn answer to hot conversations, alongside
-AQE skew splitting for the relational joins.
+merge-scan task. ``asof_join_auto`` keeps ONE merge-scan but keys it by
+``(entity, __slice)``: entities above a row-count threshold are sliced by
+``floor(ts / slice_width)``, the rest keep slice 0. Each probe slice of a
+hot entity receives *carry* rows — the latest build row from an earlier
+slice and/or the earliest from a later one, computed with one hash
+aggregation + one tiny window over slice summaries, all JVM-side — so every
+slice's candidates are self-contained. Results are identical to the
+unsliced join for every direction (tests/test_asof.py) while the per-task
+group size is bounded by rows-per-(entity, slice).
 """
 
 from __future__ import annotations
@@ -255,162 +256,109 @@ def asof_join_auto(
     hot_threshold: int = 1_000_000,
     slice_width_s: int = 3600,
 ) -> DataFrame:
-    """Skew-adaptive as-of join: entities whose build side exceeds
-    ``hot_threshold`` rows take the salted (time-sliced) path, everything
-    else the plain merge-scan (``asof_join``); results are unioned.
+    """Skew-adaptive as-of join: one merge-scan (``asof_join``) keyed by
+    ``(entity, __slice)``. Entities whose build side exceeds
+    ``hot_threshold`` rows are time-sliced, ``__slice = floor(ts /
+    slice_width_s)``; every other entity keeps ``__slice = 0`` and merges
+    exactly as in the plain join. ``hot_threshold <= 0`` slices every
+    entity and skips the count aggregation and its broadcast. Results are
+    identical to ``asof_join`` for every direction (tested).
 
-    This is the production entry point at the 10^12-turn design scale: the
-    per-entity count is one cheap hash aggregation, the hot set is tiny by
-    definition (skew = few heavy keys) so it broadcasts, and cold entities
-    avoid the salted path's extra carry bookkeeping entirely.
+    Each probe slice of a hot entity gets its cross-slice candidates as
+    *carry* rows unioned into the build side: the latest build row from a
+    strictly earlier slice (backward), the earliest from a strictly later
+    slice (forward), both for nearest. The nearest match is the closer of
+    the best backward and best forward candidates, so the carries give the
+    sliced merge the same candidates the unsliced one sees. The carries
+    come from one hash aggregation over hot build rows and probe-slice
+    markers plus one window over the slice-level rows, all JVM-side.
 
-    The default threshold matches the plain path's per-task budget
+    The per-entity count is one cheap hash aggregation and the hot set is
+    tiny by definition (skew = few heavy keys), so it broadcasts. The
+    default threshold matches the plain path's per-task budget
     (~``ASOF_TARGET_PARTITION_BYTES`` at ~40 B/row ≈ 1.6M rows): below it
-    a single merge-scan task absorbs the entity cheaply and the salted
-    bookkeeping only adds cost; above it the entity is a straggler and
-    slicing wins (measured on the skewed bench corpus: plain 19.2s vs auto
-    11.2s at a 1.6M-row hot entity; plain wins below ~1M — bench.py
-    ``skew_asof``).
+    a single merge-scan task absorbs the entity cheaply and slicing only
+    adds carry bookkeeping; above it the entity is a straggler and slicing
+    wins (bench.py ``skew_asof``).
     """
     assert direction in ("backward", "forward", "nearest")
-    counts = build.groupBy(by).agg(F.count(F.lit(1)).alias("__n"))
-    hot = counts.filter(F.col("__n") > hot_threshold).select(by)
-    kw = dict(
-        by=by, left_on=left_on, right_on=right_on, direction=direction,
-        tolerance=tolerance, allow_exact_matches=allow_exact_matches,
-        value_cols=value_cols, tiebreak=tiebreak,
-    )
-    cold_out = asof_join(
-        probe.join(F.broadcast(hot), on=by, how="left_anti"),
-        build.join(F.broadcast(hot), on=by, how="left_anti"),
-        **kw,
-    )
-    hot_out = asof_join_salted(
-        probe.join(F.broadcast(hot), on=by, how="left_semi"),
-        build.join(F.broadcast(hot), on=by, how="left_semi"),
-        slice_width_s=slice_width_s,
-        **kw,
-    )
-    return cold_out.unionByName(hot_out)
-
-
-def asof_join_salted(
-    probe: DataFrame,
-    build: DataFrame,
-    by: str = "conv_id",
-    left_on: str = "query_ts",
-    right_on: str = "ts",
-    direction: str = "backward",
-    tolerance: float | None = None,
-    allow_exact_matches: bool = True,
-    value_cols: list[str] | None = None,
-    tiebreak: tuple[str, ...] = ("turn_idx",),
-    slice_width_s: int = 3600,
-) -> DataFrame:
-    """Skew-safe as-of join: time-sliced sub-keys + carry-in replication.
-
-    Identical results to ``asof_join`` (tested). The final merge-scan range-
-    partitions on the composite ``(entity, slice)`` key, so the rows one
-    task holds for an entity are bounded by rows-per-(entity, slice)
-    instead of rows-per-entity.
-
-    ``direction='nearest'`` (round 5 — closes the last asof gap): carries
-    from BOTH sides of every slice would double the carry bookkeeping
-    inside one pass, so nearest is instead COMPOSED from the two
-    direction-specific passes — each already exactly equal to pandas
-    merge_asof for its direction — and the closer match wins per probe
-    row, backward winning exact-distance ties (pandas 'nearest'
-    semantics, pinned by the property test). Cost: two salted passes plus
-    a probe-id equijoin; the probe side is frozen once via an eager
-    localCheckpoint so the synthetic row id is stable across both
-    branches.
-    """
-    assert direction in ("backward", "forward", "nearest")
-    if direction == "nearest":
-        return _salted_nearest(
-            probe, build, by, left_on, right_on, tolerance,
-            allow_exact_matches, value_cols, tiebreak, slice_width_s,
-        )
     slice_col = "__slice"
     width_us = slice_width_s * 1_000_000
+    _, value_cols, _, _, _ = _plan(probe, build, by, left_on, right_on, value_cols)
+    tb = [t for t in tiebreak if t in build.columns]
+    vals = [c for c in dict.fromkeys([right_on, *value_cols, *tb]) if c != by]
 
-    by_l, value_cols, rename, carried, out_schema = _plan(
-        probe, build, by, left_on, right_on, value_cols
-    )
-    assert len(by_l) == 1, "salted path keys on a single entity column"
+    if hot_threshold > 0:
+        counts = build.groupBy(by).agg(F.count(F.lit(1)).alias("__n"))
+        hot = F.broadcast(
+            counts.filter(F.col("__n") > hot_threshold)
+            .select(by, F.lit(True).alias("__hot"))
+        )
+    else:
+        hot = None
 
-    p = probe.withColumn(
-        slice_col, F.floor(us(F.col(left_on)) / width_us)
-    )
-    b = build.filter(F.col(right_on).isNotNull()).withColumn(
-        slice_col, F.floor(us(F.col(right_on)) / width_us)
-    )
+    def sliced(df: DataFrame, ts: str) -> DataFrame:
+        s = F.floor(us(F.col(ts)) / width_us)
+        if hot is None:
+            return df.withColumn("__hot", F.lit(True)).withColumn(slice_col, s)
+        return df.join(hot, on=by, how="left").select(
+            *df.columns, "__hot",
+            F.when(F.col("__hot"), s).otherwise(F.lit(0)).alias(slice_col),
+        )
 
-    # ONE aggregation produces both the per-(entity, slice) build summary
-    # (the slice's extreme build row — latest for backward, earliest for
-    # forward) and the "this slice contains probes" flag: build rows and
-    # probe slice-markers go through a tagged union into a single hash agg,
-    # replacing the previous summaries-groupBy + probe-distinct + union
-    # (two shuffles and a second pass over slice rows). max_by/min_by skip
-    # null ordering keys, so probe-only slices aggregate to a null payload.
-    payload = F.struct(*[F.col(c) for c in build.columns])
-    order_key = F.struct(
-        us(F.col(right_on)),
-        *[F.col(t) for t in tiebreak if t in build.columns],
-    )
-    payload_type = T.StructType(build.schema.fields)
-    ok_type = b.select(order_key.alias("__ok")).schema["__ok"].dataType
-    b_tag = b.select(
-        F.col(by), F.col(slice_col),
-        payload.alias("__payload"), order_key.alias("__ok"),
+    p = sliced(probe, left_on)
+    b = sliced(build.filter(F.col(right_on).isNotNull()), right_on)
+
+    # ONE aggregation over hot rows yields each slice's extreme build rows
+    # and whether the slice holds probes: build rows and probe-slice
+    # markers go through a tagged union. max_by/min_by skip null ordering
+    # keys, so probe-only slices aggregate to null payloads.
+    b_tag = b.filter(F.col("__hot")).select(
+        by, slice_col,
+        F.struct(*vals).alias("__payload"),
+        F.struct(us(F.col(right_on)), *tb).alias("__ok"),
         F.lit(0).alias("__probe"),
     )
-    p_tag = p.select(
-        F.col(by), F.col(slice_col),
-        F.lit(None).cast(payload_type).alias("__payload"),
-        F.lit(None).cast(ok_type).alias("__ok"),
+    p_tag = p.filter(F.col("__hot") & F.col(left_on).isNotNull()).select(
+        by, slice_col,
+        *[F.lit(None).cast(b_tag.schema[c].dataType).alias(c)
+          for c in ("__payload", "__ok")],
         F.lit(1).alias("__probe"),
     )
-    pick = F.max_by("__payload", "__ok") if direction == "backward" else \
-        F.min_by("__payload", "__ok")
-    agg = (
-        b_tag.unionByName(p_tag)
-        .groupBy(by, slice_col)
-        .agg(pick.alias("__payload"), F.max("__probe").alias("__probe"))
+    picks = []
+    if direction != "forward":
+        picks.append(F.max_by("__payload", "__ok").alias("__last"))
+    if direction != "backward":
+        picks.append(F.min_by("__payload", "__ok").alias("__first"))
+    agg = b_tag.unionByName(p_tag).groupBy(by, slice_col).agg(
+        *picks, F.max("__probe").alias("__probe")
     )
 
-    # carry-in per probe slice: latest summary from any STRICTLY earlier
-    # slice (backward) / earliest from any strictly later slice (forward).
-    # With one aggregated row per slice, excluding the current row from the
-    # frame excludes exactly the same-slice summary; the window runs over
-    # slice-level rows only — tiny even for the hottest entity.
-    if direction == "backward":
-        w = (
-            Window.partitionBy(by)
-            .orderBy(slice_col)
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        carry_val = F.last("__payload", ignorenulls=True).over(w)
-    else:
-        w = (
-            Window.partitionBy(by)
-            .orderBy(slice_col)
-            .rowsBetween(1, Window.unboundedFollowing)
-        )
-        carry_val = F.first("__payload", ignorenulls=True).over(w)
+    # carries per probe slice: the latest summary from any STRICTLY earlier
+    # slice and/or the earliest from any strictly later one. With one row
+    # per slice, excluding the current row from the frame excludes exactly
+    # the same-slice summary; the window runs over slice-level rows only,
+    # tiny even for the hottest entity.
+    w = Window.partitionBy(by).orderBy(slice_col)
+    carry = []
+    if direction != "forward":
+        carry.append(F.last("__last", ignorenulls=True).over(
+            w.rowsBetween(Window.unboundedPreceding, -1)))
+    if direction != "backward":
+        carry.append(F.first("__first", ignorenulls=True).over(
+            w.rowsBetween(1, Window.unboundedFollowing)))
     carries = (
-        agg.withColumn("__carry", carry_val)
-        .filter((F.col("__probe") == 1) & F.col("__carry").isNotNull())
-        .select(by, slice_col, *[F.col(f"__carry.{c}").alias(c) for c in build.columns if c != by])
+        agg.select(by, slice_col, "__probe", F.array(*carry).alias("__carry"))
+        .filter(F.col("__probe") == 1)
+        .select(by, slice_col, F.inline(
+            F.filter("__carry", lambda c: c.isNotNull())))
     )
-    b_salted = b.unionByName(carries.select(*b.columns))
 
-    # final merge: the composite (entity, slice) key routes each slice to its
-    # own range partition — hot entities split across tasks — while the
-    # merge itself stays the bulk merge-scan (no per-group Python calls)
+    # the composite (entity, slice) key routes each hot slice to its own
+    # range partition, while the merge stays one bulk merge-scan
     out = asof_join(
-        p,
-        b_salted,
+        p.drop("__hot"),
+        b.select(by, slice_col, *vals).unionByName(carries),
         by=[by, slice_col],
         left_on=left_on,
         right_on=right_on,
@@ -421,55 +369,3 @@ def asof_join_salted(
         tiebreak=tiebreak,
     )
     return out.drop(slice_col)
-
-
-def _salted_nearest(
-    probe: DataFrame,
-    build: DataFrame,
-    by: str,
-    left_on: str,
-    right_on: str,
-    tolerance: float | None,
-    allow_exact_matches: bool,
-    value_cols: list[str] | None,
-    tiebreak: tuple[str, ...],
-    slice_width_s: int,
-) -> DataFrame:
-    """nearest = closer of (salted backward, salted forward) per probe
-    row; backward wins exact-distance ties (empirically pinned pandas
-    merge_asof 'nearest' behavior). See asof_join_salted's docstring."""
-    pid = "__asof_pid"
-    p_id = probe.withColumn(pid, F.monotonically_increasing_id()).localCheckpoint(
-        eager=True  # freeze the synthetic id: both branches must see ONE row identity
-    )
-    _, value_cols, rename, _, _ = _plan(
-        probe, build, by, left_on, right_on, value_cols
-    )
-    # both passes must carry the matched event time for the distance
-    # comparison even when the caller didn't ask for it
-    vc = value_cols if right_on in value_cols else [right_on, *value_cols]
-    rn = _plan(p_id, build, by, left_on, right_on, vc)[2]
-    kw = dict(
-        by=by, left_on=left_on, right_on=right_on, tolerance=tolerance,
-        allow_exact_matches=allow_exact_matches, value_cols=vc,
-        tiebreak=tiebreak, slice_width_s=slice_width_s,
-    )
-    back = asof_join_salted(p_id, build, direction="backward", **kw)
-    fwd = asof_join_salted(p_id, build, direction="forward", **kw)
-    bsel = back.select(pid, *[F.col(rn[c]).alias(f"__b_{c}") for c in vc])
-    fsel = fwd.select(pid, *[F.col(rn[c]).alias(f"__f_{c}") for c in vc])
-    combined = p_id.join(bsel, pid, "left").join(fsel, pid, "left")
-    bd = F.abs(us(F.col(f"__b_{right_on}")) - us(F.col(left_on)))
-    fd = F.abs(us(F.col(f"__f_{right_on}")) - us(F.col(left_on)))
-    use_back = F.col(f"__b_{right_on}").isNotNull() & (
-        F.col(f"__f_{right_on}").isNull() | (bd <= fd)
-    )
-    return combined.select(
-        *probe.columns,
-        *[
-            F.when(use_back, F.col(f"__b_{c}"))
-            .otherwise(F.col(f"__f_{c}"))
-            .alias(rename[c])
-            for c in value_cols
-        ],
-    )

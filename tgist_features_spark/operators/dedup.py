@@ -813,11 +813,14 @@ def decontaminate(
 
 
 def _position_grams(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    """(id, __total, g): one row per n-gram POSITION — no within-doc
-    dedup, because span-level statistics weight repeated spans by how
-    often they occur. Same indexed-transform + explode_outer discipline
-    as ``_distinct_grams`` (see ``_gram_expr`` / those docstrings for the
-    optimizer traps this dodges)."""
+    """(id, __total, p, g): one row per n-gram POSITION with its 0-based
+    start index and the doc's position count — no within-doc dedup,
+    because span-level statistics weight repeated spans by how often they
+    occur, and span removal maps dup grams back onto token spans. Same
+    indexed-transform + posexplode_outer discipline as
+    ``_distinct_grams`` (InferFiltersFromGenerate exempts outer generates;
+    see ``_gram_expr`` / those docstrings for the optimizer traps this
+    dodges)."""
     return (
         df.select(
             F.col(id_col).alias("id"), F.split(F.col(text_col), " ").alias("__tk")
@@ -826,64 +829,49 @@ def _position_grams(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFr
         .select(
             "id",
             F.size("grams").cast("long").alias("__total"),
-            F.explode_outer("grams").alias("g"),
+            F.posexplode_outer("grams").alias("p", "g"),
         )
         .filter(F.col("g").isNotNull())
     )
 
 
-def cross_doc_span_stats(
+def _dup_positions(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 8,
-    min_docs: int = 2,
-    max_frac: float = 0.5,
-    max_df: int | None = 10_000,
+    id_col: str,
+    text_col: str,
+    n: int,
+    min_docs: int,
+    max_df: int | None,
 ) -> DataFrame:
-    """Sequence-level duplication signal: per document, the fraction of
-    token n-gram positions whose n-gram also occurs in at least
-    ``min_docs - 1`` OTHER documents — what document-level dedup misses
-    (boilerplate headers, quoted passages, templated spans; the drop rule
-    of Lee et al.'s 'Deduplicating Training Data' line of work, applied
-    as a per-doc filter). Returns (id_col, n_spans, n_dup_spans,
-    dup_span_frac, keep) for every doc with >= n tokens.
+    """(id, __total, p, __dup): every n-gram position of every doc, with
+    ``__dup`` = 1 when its gram occurs in >= ``min_docs`` documents — the
+    one dup-span rule behind ``cross_doc_span_stats`` (sums the flag) and
+    ``remove_dup_spans`` (filters on it).
 
     Scale shape: one position explode (~tokens rows), a (g)-keyed
-    distinct-doc count (partial-aggregated), a shuffle join back on g,
-    and a (doc)-keyed partial agg. The span-stats side is span-vocabulary
-    sized — too big to broadcast at 100 TB, so the g-join is the honest
-    standard cost of sequence-level dedup (cheaper than suffix arrays,
-    same signal for fixed n).
+    distinct-doc count (partial-aggregated) and a shuffle join back on g.
+    The doc-frequency side is span-vocabulary sized — too big to broadcast
+    at 100 TB, so the g-join is the honest standard cost of sequence-level
+    dedup (cheaper than suffix arrays, same signal for fixed n).
 
     ``max_df`` bounds the g-join's hot keys WITHOUT changing semantics:
-    a gram in more than ``max_df`` documents is dup by definition (its
-    doc frequency already exceeds ``min_docs``), so its positions never
-    need the per-gram join — they are flagged through a broadcast join
-    against the (small) heavy-hitter tail, and their join key is salted
-    per-doc so universal boilerplate grams stop concentrating on single
-    reducers. To keep the gram pipeline at the uncapped plan's two
-    evaluations (probe + doc-frequency agg), the dup-gram relation is
-    materialized ONCE via an eager localCheckpoint — it is the vocabulary
-    the uncapped plan shuffles anyway, filtered down to dup grams — and
-    both the hot broadcast and the cold join read the materialized
-    blocks. The capped and uncapped plans produce IDENTICAL output
-    (oracle-verified); ``max_df=None`` keeps the lazy single-join plan."""
-    if min_docs < 1:
-        raise ValueError("cross_doc_span_stats: min_docs must be >= 1")
+    a gram in more than ``max_df`` documents is dup by definition (max_df
+    is clamped to >= min_docs), so its positions never need the per-gram
+    join — they are flagged through a broadcast join against the (small)
+    heavy-hitter tail, and their join key is salted per-doc so universal
+    boilerplate grams stop concentrating on single reducers. To keep the
+    gram pipeline at the uncapped plan's two evaluations (probe +
+    doc-frequency agg), the dup-gram relation is materialized ONCE via an
+    eager localCheckpoint — it is the vocabulary the uncapped plan
+    shuffles anyway, filtered down to dup grams — and both the hot
+    broadcast and the cold join read the materialized blocks. Capped and
+    uncapped plans flag IDENTICAL positions (pinned by test);
+    ``max_df=None`` keeps the lazy single-join plan."""
     pos = _position_grams(df, id_col, text_col, n)
     gd = pos.groupBy("g").agg(F.count_distinct("id").alias("__nd"))
     if max_df is None or n < 2:
-        per_doc = (
-            pos.join(gd, "g")
-            .groupBy("id")
-            .agg(
-                F.max("__total").alias("n_spans"),
-                F.sum(
-                    F.when(F.col("__nd") >= min_docs, F.lit(1)).otherwise(F.lit(0))
-                ).alias("n_dup_spans"),
-            )
-        )
+        dup = F.col("__nd") >= min_docs
+        flagged = pos.join(gd, "g")
     else:
         max_df = max(max_df, min_docs)  # hot must imply dup
         dup_grams = (
@@ -904,17 +892,42 @@ def cross_doc_span_stats(
         pos2 = pos.join(F.broadcast(hot), "g", "left").withColumn(
             "__jk", F.when(F.col("__hot") == 1, salted).otherwise(F.col("g"))
         )
-        scored = pos2.join(
+        dup = (F.col("__hot") == 1) | (F.col("__cold") == 1)
+        flagged = pos2.join(
             cold_dup.withColumnRenamed("g", "__jk"), "__jk", "left"
         )
-        per_doc = scored.groupBy("id").agg(
-            F.max("__total").alias("n_spans"),
-            F.sum(
-                F.when(
-                    (F.col("__hot") == 1) | (F.col("__cold") == 1), F.lit(1)
-                ).otherwise(F.lit(0))
-            ).alias("n_dup_spans"),
-        )
+    return flagged.select(
+        "id", "__total", "p", F.when(dup, F.lit(1)).otherwise(F.lit(0)).alias("__dup")
+    )
+
+
+def cross_doc_span_stats(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n: int = 8,
+    min_docs: int = 2,
+    max_frac: float = 0.5,
+    max_df: int | None = 10_000,
+) -> DataFrame:
+    """Sequence-level duplication signal: per document, the fraction of
+    token n-gram positions whose n-gram also occurs in at least
+    ``min_docs - 1`` OTHER documents — what document-level dedup misses
+    (boilerplate headers, quoted passages, templated spans; the drop rule
+    of Lee et al.'s 'Deduplicating Training Data' line of work, applied
+    as a per-doc filter). Returns (id_col, n_spans, n_dup_spans,
+    dup_span_frac, keep) for every doc with >= n tokens.
+
+    Scale shape: the dup-flagged position stream of ``_dup_positions``
+    (see its docstring for the g-join and the ``max_df`` hot-gram divert,
+    which never changes the output) and a (doc)-keyed partial agg."""
+    if min_docs < 1:
+        raise ValueError("cross_doc_span_stats: min_docs must be >= 1")
+    per_doc = (
+        _dup_positions(df, id_col, text_col, n, min_docs, max_df)
+        .groupBy("id")
+        .agg(F.max("__total").alias("n_spans"), F.sum("__dup").alias("n_dup_spans"))
+    )
     frac = F.round(F.col("n_dup_spans") / F.col("n_spans"), 6)
     return per_doc.select(
         F.col("id").alias(id_col),
@@ -922,24 +935,6 @@ def cross_doc_span_stats(
         "n_dup_spans",
         frac.alias("dup_span_frac"),
         (frac <= max_frac).cast("int").alias("keep"),
-    )
-
-
-def _position_grams_idx(
-    df: DataFrame, id_col: str, text_col: str, n: int
-) -> DataFrame:
-    """(id, p, g): one row per n-gram position with its 0-based start
-    index — the positional variant of ``_position_grams`` for operators
-    that must map dup grams back onto token spans. Same indexed-transform
-    + posexplode_outer discipline (InferFiltersFromGenerate exempts outer
-    generates; see ``_gram_expr`` / ``_distinct_grams``)."""
-    return (
-        df.select(
-            F.col(id_col).alias("id"), F.split(F.col(text_col), " ").alias("__tk")
-        )
-        .select("id", _gram_expr(F.col("__tk"), n).alias("grams"))
-        .select("id", F.posexplode_outer("grams").alias("p", "g"))
-        .filter(F.col("g").isNotNull())
     )
 
 
@@ -963,53 +958,19 @@ def remove_dup_spans(
     row: docs shorter than ``n`` tokens (and null-text docs) pass through
     untouched with n_removed 0.
 
-    Scale shape: the positional gram explode and the g-keyed
-    doc-frequency aggregation are shared machinery with
-    ``cross_doc_span_stats``; dup positions come back per doc as a sorted
+    Scale shape: the dup-flagged position stream is shared with
+    ``cross_doc_span_stats`` (``_dup_positions``, including its ``max_df``
+    hot-gram divert); dup positions come back per doc as a sorted
     start array (bounded by doc length), and the token mask is pure
     per-row higher-order arithmetic — no second text shuffle. Mask cost
     is O(tokens x covered_positions) per doc (an array_contains per
     token): linear for the typical low-dup-fraction corpus, quadratic
     only for a long document that is MOSTLY duplicated spans — which
     doc-level dedup (the cheaper pass) should have dropped first; run
-    this operator after it, as ``jobs/score_corpus.py`` does.
-
-    ``max_df`` bounds the positions-to-dup-grams join's hot keys exactly
-    as in ``cross_doc_span_stats`` (see that docstring): a gram in more
-    than ``max_df`` docs is dup by definition (max_df is clamped to
-    >= min_docs), so its positions are flagged through a broadcast of the
-    small heavy-hitter tail and their shuffle key is salted per-doc — a
-    universal boilerplate gram no longer concentrates a join key at
-    scale. Capped and uncapped plans produce IDENTICAL output (pinned by
-    test); ``max_df=None`` keeps the single-join plan."""
-    pos = _position_grams_idx(df, id_col, text_col, n)
-    gd_all = pos.groupBy("g").agg(F.count_distinct("id").alias("__nd"))
-    if max_df is None or n < 2:
-        gd = gd_all.filter(F.col("__nd") >= min_docs).select("g")
-        dup_pos = pos.join(gd, "g")
-    else:
-        max_df = max(max_df, min_docs)  # hot must imply dup
-        dup_grams = (
-            gd_all.filter(F.col("__nd") >= min_docs)
-            .select("g", (F.col("__nd") > max_df).cast("int").alias("__hot"))
-            .localCheckpoint(eager=True)
-        )
-        hot = dup_grams.filter(F.col("__hot") == 1).select("g", "__hot")
-        cold_dup = dup_grams.filter(F.col("__hot") == 0).select(
-            "g", F.lit(1).alias("__cold")
-        )
-        # every n>=2 gram contains a space, so a space-free salted key can
-        # never collide with a real gram in the cold join below
-        salted = F.concat(
-            F.lit("\x00"),
-            F.translate(F.col("id").cast("string"), " ", ""),
-        )
-        pos2 = pos.join(F.broadcast(hot), "g", "left").withColumn(
-            "__jk", F.when(F.col("__hot") == 1, salted).otherwise(F.col("g"))
-        )
-        dup_pos = pos2.join(
-            cold_dup.withColumnRenamed("g", "__jk"), "__jk", "left"
-        ).filter((F.col("__hot") == 1) | (F.col("__cold") == 1))
+    this operator after it, as ``jobs/score_corpus.py`` does."""
+    dup_pos = _dup_positions(df, id_col, text_col, n, min_docs, max_df).filter(
+        F.col("__dup") == 1
+    )
     starts = dup_pos.groupBy("id").agg(
         F.sort_array(F.collect_set("p")).alias("__starts")
     )

@@ -36,18 +36,11 @@ def _dot(a, b):
 
 
 def _l2norm(a):
-    """L2 norm of an array<double> column (same fold shape `_cosine` has
-    always used, so a hoisted norm is bit-identical to an inline one)."""
+    """L2 norm of an array<double> column (the same aggregate-fold shape
+    as `_dot`, so a norm hoisted below a join is bit-identical to one
+    computed per pair)."""
     a = F.col(a) if isinstance(a, str) else a
     return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda s, v: s + v))
-
-
-def _cosine(a, b):
-    """Cosine similarity between two array columns — pure Catalyst
-    (zip_with + aggregate fold), runs inside whole-stage codegen."""
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    return _dot(a, b) / (_l2norm(a) * _l2norm(b))
 
 
 def cosine_topk(
@@ -65,8 +58,9 @@ def cosine_topk(
     # norms are per-ROW quantities: hoist them below the all-pairs join so
     # each side's fold runs once per row, not once per (query, neighbor)
     # pair (guide §1.2 — don't recompute per pair what is per-row). The
-    # hoisted expression is the exact fold `_cosine` inlines, so the double
-    # — and therefore every rounded cosine — is bit-identical.
+    # cosine is `_dot` over the product of the two `_l2norm` folds, so the
+    # double — and therefore every rounded cosine — is bit-identical to an
+    # inline per-pair computation.
     base = df.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).cast("array<double>").alias("v"),
@@ -112,7 +106,7 @@ def hard_negatives(
     LSH/IVF candidate generators in this module and re-rank exactly,
     exactly as ``ann_lsh``/``ivf_ann`` do for nearest-neighbor search."""
     # per-row norms hoisted below the pair join (see cosine_topk): the
-    # fold shape is `_cosine`'s own, so the values are bit-identical.
+    # fold is `_l2norm`, so the values are bit-identical.
     base = df.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(label_col).alias("neighbor_label"),
@@ -158,9 +152,9 @@ def _lsh_multi_buckets(
     All tables' buckets come out of ONE vectorized UDF pass over the scan
     (a single (batch, n_tables*n_planes) matmul), then one explode; the big
     side is still read exactly once. ``nv`` is the vector's L2 norm (the
-    exact fold `_cosine` would inline), hoisted here so the re-rank pays
-    one dot per candidate pair instead of dot + two norm folds — carrying
-    it through the explode/shuffle costs 8 bytes per row."""
+    `_l2norm` fold a per-pair cosine would run), hoisted here so the
+    re-rank pays one dot per candidate pair instead of dot + two norm
+    folds — carrying it through the explode/shuffle costs 8 bytes per row."""
     rng = np.random.default_rng(seed)
     planes = rng.normal(size=(n_tables * n_planes, dim)).astype(np.float64)
     weights = (1 << np.arange(n_planes)).astype(np.int64)
@@ -183,8 +177,9 @@ def _lsh_multi_buckets(
     # below this projection and evaluate the Arrow UDF a SECOND time per
     # row (guide §4.4; the _banded_numeric discipline). The array always
     # has n_tables >= 1 elements, so the outer generate emits the same
-    # rows and the null-row filter below is a no-op that only restores
-    # the non-nullable schema.
+    # rows. The filter below drops the would-be null row of an empty
+    # array and lets the optimizer derive isnotnull(table); it does not
+    # change the schema — `table` and `bucket` stay nullable.
     return sig.select(
         "id",
         "v",
@@ -370,8 +365,9 @@ def ivf_ann_topk(
         top = np.argpartition(-sim, nprobe - 1, axis=1)[:, :nprobe]
         return pd.Series(list(top.astype(np.int64)))
 
-    # `nv`/`nq` hoist the per-row L2 norms (the exact fold `_cosine` would
-    # inline) out of the candidate re-rank: one dot per pair, not three folds.
+    # `nv`/`nq` hoist the per-row L2 norms (the `_l2norm` fold a per-pair
+    # cosine would run) out of the candidate re-rank: one dot per pair, not
+    # three folds.
     # coalesce makes `cell` statically non-nullable (the UDF never returns
     # null, but Catalyst only sees declared nullability): without it the
     # cell equi-join below infers an isnotnull(cell_of(...)) filter pushed

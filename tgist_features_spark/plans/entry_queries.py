@@ -25,7 +25,7 @@ from tgist_features_spark.functions.text import (
     with_lang_id,
     with_quality_features,
 )
-from tgist_features_spark.operators.asof import asof_join, asof_join_salted
+from tgist_features_spark.operators.asof import asof_join, asof_join_auto
 from tgist_features_spark.operators.dedup import (
     exact_dedup,
     minhash_lsh_pairs,
@@ -389,10 +389,10 @@ FROM j
 
 def q_asof_salted(spark, sf):
     probe, build = _asof_sides(spark, sf)
-    j = asof_join_salted(
+    j = asof_join_auto(
         probe, build, by="user_id", left_on="query_ts", right_on="ts",
         direction="backward", value_cols=["ts", "value"], tiebreak=(),
-        slice_width_s=7 * 86400,
+        hot_threshold=0, slice_width_s=7 * 86400,
     )
     return _asof_project(j)
 
@@ -1638,8 +1638,9 @@ def q_embed_near_dup(spark, sf):
     """Embedding-cosine near-duplicate pairs (brute-force a<b).
 
     Norms are hoisted below the n² join (one fold per ROW instead of two
-    folds per PAIR — the hoisted fold is `_cosine`'s own expression, so
-    every double is bit-identical); only the dot runs per pair, and the
+    folds per PAIR — the hoisted fold is `_l2norm`, the same expression
+    a per-pair `_dot / (_l2norm * _l2norm)` evaluates, so every double is
+    bit-identical); only the dot runs per pair, and the
     join condition is authored with the cheap `a < b` FIRST so the And
     short-circuits half the ordered pairs before any fold runs (the
     pushed-filter form evaluated the full cosine first, for all n²)."""
